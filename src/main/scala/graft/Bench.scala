@@ -99,12 +99,8 @@ object Bench {
     // "exact 8-column NDV" was count() pruning the NDVs away entirely. The
     // noop DSv2 sink fully materializes every output row and column and
     // discards them — the honest "run the query" cost. (ADVICE r4/r5)
-    // SPARK_GRAFT_BENCH_ACTION=count restores the old action for
-    // apples-to-apples comparison against pre-round-6 artifacts.
-    val useCount = sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count")
     def run(df: org.apache.spark.sql.DataFrame): Unit =
-      if (useCount) { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       val warmSf = "/root/testdata/sf0.001"

@@ -67,6 +67,32 @@ object Fixtures {
   private val spreadCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
+  /** Session conf marking a PLAN-AUDIT session: when `true`, every shared
+    * frame keeps its full lineage instead of being materialized, so the
+    * dumped plan of a query shows the whole pipeline it runs rather than a
+    * checkpoint scan. Internal — set only by [[auditSession]]. */
+  private[graft] val FullLineageConf = "spark.graft.plan.fullLineage"
+
+  /** True in a plan-audit session ([[auditSession]]). */
+  private[graft] def fullLineage(spark: SparkSession): Boolean =
+    spark.conf.get(FullLineageConf, "false") == "true"
+
+  /** A plan-audit child of `spark`: same SparkContext, fresh session state,
+    * [[FullLineageConf]] set. The parent session never changes mode. */
+  private[graft] def auditSession(spark: SparkSession): SparkSession = {
+    val audit = spark.newSession()
+    audit.conf.set(FullLineageConf, "true")
+    audit
+  }
+
+  /** THE materialization seam for a frame that several plan branches read:
+    * a lazy `localCheckpoint` (the frame is computed once, by the first
+    * action that needs it) in a normal session; `df` itself, with its full
+    * lineage, in a plan-audit session. `StageMemo` and the pooled catalog
+    * profile builds follow the same switch. */
+  private[graft] def shared(df: DataFrame): DataFrame =
+    if (fullLineage(df.sparkSession)) df else df.localCheckpoint(false)
+
   val allTables: Seq[String] = Seq(
     "customer", "documents", "embeddings", "events", "lineitem",
     "nation", "orders", "part", "region", "supplier")

@@ -3,13 +3,13 @@ package graft.cli
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.GraftSession
+import graft.{Fixtures, GraftSession}
 
 /** Writes one `<outDir>/<query>_<tag>.txt` formatted-plan file per named
   * query — the per-change before/after plan artifacts the optimization
   * rounds commit under `plans/r16/` (VERDICT/judge requirement: plan
   * claims must be checkable against committed explain output). Same plan
-  * source as [[PlansDump]] (AQE-finalized, planOnly audit twins).
+  * source as [[PlansDump]]: AQE-finalized, built in a plan-audit session.
   *
   * `PlanFiles <outDir> <tag> <name1,name2,...> [sfDir]`
   */
@@ -22,8 +22,9 @@ object PlanFiles {
     require(Files.isDirectory(Paths.get(dir)), s"data dir not found: $dir")
     Files.createDirectories(Paths.get(outDir))
     val spark = GraftSession.local()
+    val audit = Fixtures.auditSession(spark)
     names.foreach { name =>
-      val plan = PlansDump.planFor(spark, name, dir)
+      val plan = PlansDump.planFor(spark, audit, name, dir)
       Files.write(Paths.get(outDir, s"${name}_$tag.txt"),
         plan.getBytes(StandardCharsets.UTF_8))
       println(s"[plans] wrote $outDir/${name}_$tag.txt")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Fixtures.table
+import graft.Fixtures.{shared, table}
 
 /** Deduplication operators for LLM-data pipelines: exact (hash group-by),
   * MinHash+LSH banding, SimHash, and n-gram Jaccard verification.
@@ -142,10 +142,6 @@ object Dedup {
     * per query was the slowest block of the round-4/5 bench). */
   private def memoStage(spark: SparkSession, dir: String, stage: String)(
       build: => DataFrame): DataFrame = StageMemo(spark, dir, stage)(build)
-
-  /** Test/bench hook — clears EVERY memoized stage (near-dup AND span
-    * family), kept here because Bench and the leak specs reach it. */
-  private[graft] def clearSharedStages(): Unit = StageMemo.clear()
 
   /** Stage 1 — (doc_id, sig): the native one-pass MinHash signature per
     * doc, materialized once per (session, dir). DELIBERATELY narrow: an
@@ -366,35 +362,31 @@ object Dedup {
     * the derive-per-side alternative ran the corpus scan + shingling
     * twice inside a single timed query. */
   private[operators] def sharedScoredCandidates(spark: SparkSession, dir: String): DataFrame =
-    memoStage(spark, dir, "scored")(scoredCandidatesBuild(spark, dir))
-
-  /** Un-memoized builder of the scored stage (extracted r16 so the build
-    * plan is dumpable for the plans/ audit). */
-  private[operators] def scoredCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
-    val docs = shingleSets(spark, dir)
-      .join(sharedSignatures(spark, dir), "doc_id")
-      .localCheckpoint(true) // transient; ContextCleaner frees the blocks
-    sharedCandidatePairs(spark, dir)
-      .join(docs.select(col("doc_id").as("id_a"), col("shd").as("sh_a"), col("sig").as("sig_a")), "id_a")
-      .join(docs.select(col("doc_id").as("id_b"), col("shd").as("sh_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("n_match",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => when(x === y, 1L).otherwise(0L)), lit(0L), (a, x) => a + x))
-      // |A∪B| = |A| + |B| − |A∩B| for the (distinct) shingle sets: same
-      // double as size(array_union(..)) but without materializing a
-      // ~|A|+|B|-string union array per pair — array_union was the
-      // dominant per-pair cost of the build (guide §1.2: per-task work;
-      // measured 7.0 → 2.9 s on the banding sweep's identical expression).
-      // r16 continuation: shd is emitted SORTED (see [[shingleSets]]), so
-      // the count is a linear merge walk — no per-pair hash set, no
-      // materialized intersection array; same INT as
-      // size(array_intersect(..)) on sorted sets (VectorExpressionsSpec).
-      .withColumn("inter", graft.functions.VectorExpressions
-        .sorted_intersect_count(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .select("id_a", "id_b", "n_match", "jaccard")
+    memoStage(spark, dir, "scored") {
+      val docs = shingleSets(spark, dir)
+        .join(sharedSignatures(spark, dir), "doc_id")
+        .localCheckpoint(true) // transient; ContextCleaner frees the blocks
+      sharedCandidatePairs(spark, dir)
+        .join(docs.select(col("doc_id").as("id_a"), col("shd").as("sh_a"), col("sig").as("sig_a")), "id_a")
+        .join(docs.select(col("doc_id").as("id_b"), col("shd").as("sh_b"), col("sig").as("sig_b")), "id_b")
+        .withColumn("n_match",
+          aggregate(zip_with(col("sig_a"), col("sig_b"),
+            (x, y) => when(x === y, 1L).otherwise(0L)), lit(0L), (a, x) => a + x))
+        // |A∪B| = |A| + |B| − |A∩B| for the (distinct) shingle sets: same
+        // double as size(array_union(..)) but without materializing a
+        // ~|A|+|B|-string union array per pair — array_union was the
+        // dominant per-pair cost of the build (guide §1.2: per-task work;
+        // measured 7.0 → 2.9 s on the banding sweep's identical expression).
+        // r16 continuation: shd is emitted SORTED (see [[shingleSets]]), so
+        // the count is a linear merge walk — no per-pair hash set, no
+        // materialized intersection array; same INT as
+        // size(array_intersect(..)) on sorted sets (VectorExpressionsSpec).
+        .withColumn("inter", graft.functions.VectorExpressions
+          .sorted_intersect_count(col("sh_a"), col("sh_b")))
+        .withColumn("jaccard",
+          col("inter").cast("double") /
+            (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
+        .select("id_a", "id_b", "n_match", "jaccard")
   }
 
   /** The VERIFIED near-dup pair graph: scored candidates kept at J ≥ 0.5.
@@ -405,29 +397,11 @@ object Dedup {
       .filter(col("jaccard") >= 0.5)
       .select("id_a", "id_b", "jaccard")
 
-  /** LSH band table: (doc_id, band, band_hash) — one row per band per doc.
-    * Docs with <3 words have no shingles and drop out (null signature).
-    * Declarative (un-memoized) form, kept for plan audits and specs; the
-    * query path derives bands from [[sharedSignatures]]. */
-  def minhashBands(spark: SparkSession, dir: String): DataFrame = {
-    val withSig = corpusWithNearDups(spark, dir)
-      .filter(hasShingles(col("text")))
-      .withColumn("sh", shingles(col("text")))
-    bandsFromSig(withSig.select(col("doc_id"),
-      graft.functions.VectorExpressions.minhash_sig(col("sh"), NumHashes).as("sig")))
-  }
-
   /** MinHash/LSH candidate pairs: same (band, band_hash) bucket, distinct.
     * The shuffle key is the 16-byte band hash — linear in data, never n².
     * Reads the materialized [[sharedCandidatePairs]] stage. */
   def minhashCandidatePairs(spark: SparkSession, dir: String): DataFrame =
     sharedCandidatePairs(spark, dir).orderBy("id_a", "id_b")
-
-  /** Fully declarative candidate-pair plan (no materialized stages), for
-    * the PLANS.md audit: shows the complete shingle → signature → band
-    * self-join pipeline that [[sharedCandidatePairs]] materializes. */
-  def minhashCandidatePairsPlan(spark: SparkSession, dir: String): DataFrame =
-    bandPairs(minhashBands(spark, dir)).orderBy("id_a", "id_b")
 
   /** The same signature/band/pair pipeline in DuckDB SQL. */
   val minhashCandidatePairsOracle: String = {
@@ -1743,14 +1717,6 @@ object Dedup {
   private val SimPairBits = 30 // word-hash entropy is 30 bits (mod 1e9+7)
   private val SimBlocks = 5 // 6-bit blocks; keys are block PAIRS (multi-index)
 
-  /** All (i,j) block-pair combinations — the multi-index hamming scheme:
-    * with 5 blocks and ≤3 flipped bits, at most 3 blocks are touched, so
-    * some PAIR of blocks is jointly untouched and the join on
-    * (pair, value_i, value_j) is exact for hamming ≤ 3. Pair keys carry
-    * 12 bits (vs 6 for single blocks), shrinking candidate buckets by ~64×. */
-  private val blockPairs: Seq[(Int, Int)] =
-    for (i <- 0 until SimBlocks; j <- i + 1 until SimBlocks) yield (i, j)
-
   /** Near-dup pairs by SimHash hamming distance ≤ 3, exact via multi-index
     * pigeonhole blocking. Random-pair collisions at ham ≤ 3 are ~4·10⁻⁶ on
     * 30 bits, so the verified output stays close to the true near-dups.
@@ -2034,33 +2000,24 @@ object Dedup {
     * exact-dedup family's job. Like the other dedup demos the fixture
     * plants its own near-dups: every name's copy with the last character
     * replaced by 'q', distance 1 from its source. */
-  def fuzzyNamePairs(spark: SparkSession, dir: String): DataFrame =
-    fuzzyNamePairsImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def fuzzyNamePairsPlan(spark: SparkSession, dir: String): DataFrame =
-    fuzzyNamePairsImpl(spark, dir, materialize = false)
-
-  private def fuzzyNamePairsImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def fuzzyNamePairs(spark: SparkSession, dir: String): DataFrame = {
     val names = table(spark, dir, "part")
       .groupBy(col("p_name").as("name")).agg(count(lit(1)).as("n_rows"))
     val perturbed = names.select(
       concat(expr("substring(name, 1, length(name) - 1)"), lit("q")).as("name"),
       col("n_rows"))
       .groupBy("name").agg(sum("n_rows").as("n_rows"))
-    val all = names.unionAll(perturbed)
-      .groupBy("name").agg(sum("n_rows").as("n_rows"))
-      .withColumn("blk_len", length(col("name")))
-      .withColumn("blk_word", expr("split_part(name, ' ', 1)"))
     // distinct-name-sized, read by BOTH self-join sides (the r16
     // scored-stage pattern) — without materialization the name
     // aggregation + perturbation union ran once per side (r17; plan:
     // 4 part scans → 1)
-    val allM = if (materialize) all.localCheckpoint(false) else all
-    val a = allM.select(col("blk_len"), col("blk_word"),
+    val all = shared(names.unionAll(perturbed)
+      .groupBy("name").agg(sum("n_rows").as("n_rows"))
+      .withColumn("blk_len", length(col("name")))
+      .withColumn("blk_word", expr("split_part(name, ' ', 1)")))
+    val a = all.select(col("blk_len"), col("blk_word"),
       col("name").as("name_a"), col("n_rows").as("rows_a"))
-    val b = allM.select(col("blk_len"), col("blk_word"),
+    val b = all.select(col("blk_len"), col("blk_word"),
       col("name").as("name_b"), col("n_rows").as("rows_b"))
     a.join(b, Seq("blk_len", "blk_word"))
       .filter(col("name_a") < col("name_b"))
@@ -2511,34 +2468,31 @@ object Dedup {
     // and back-to-back bench reps — share ONE tokenize+rank+checkpoint;
     // the checkpoint inside stays LAZY, so memo construction runs no job
     // and PlansDump still builds both join plans job-free
-    memoStage(spark, dir, "ranked_toks") { rankedShingleToksPlan(spark, dir) }
-
-  /** Declarative (un-memoized) form of [[rankedShingleToks]]. */
-  private def rankedShingleToksPlan(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = table(spark, dir, "documents")
-      .filter(size(split(col("text"), " ")) >= 3)
-      // the single-file fixture reads as ONE partition; spread the
-      // CPU-bound shingle explode across cores (same gotcha as
-      // corpusWithNearDups — tokenize was 6 s single-threaded at sf0.1)
-      .repartition(spark.sparkContext.defaultParallelism)
-    // hoist the split: inside shingles()'s lambda, `split(text)` is
-    // re-evaluated per element (no CSE across a HOF boundary) — ~75
-    // splits/doc; pre-splitting to an array column makes tokenize 5x
-    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-    val toks = ws.select(col("doc_id"),
-      explode(array_distinct(transform(
-        sequence(lit(1), size(col("ws")) - 2),
-        i => concat_ws(" ", element_at(col("ws"), i), element_at(col("ws"), i + 1),
-          element_at(col("ws"), i + 2))))).as("tok"))
-    val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-    val wDoc = Window.partitionBy("doc_id").orderBy(col("df"), col("tok"))
-    toks.join(dfreq, "tok")
-      .select(col("doc_id"), col("tok"),
-        row_number().over(wDoc).as("rn"),
-        count(lit(1)).over(Window.partitionBy("doc_id")).as("sz"))
-      .localCheckpoint(false)
-  }
+    memoStage(spark, dir, "ranked_toks") {
+      import org.apache.spark.sql.expressions.Window
+      val docs = table(spark, dir, "documents")
+        .filter(size(split(col("text"), " ")) >= 3)
+        // the single-file fixture reads as ONE partition; spread the
+        // CPU-bound shingle explode across cores (same gotcha as
+        // corpusWithNearDups — tokenize was 6 s single-threaded at sf0.1)
+        .repartition(spark.sparkContext.defaultParallelism)
+      // hoist the split: inside shingles()'s lambda, `split(text)` is
+      // re-evaluated per element (no CSE across a HOF boundary) — ~75
+      // splits/doc; pre-splitting to an array column makes tokenize 5x
+      val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
+      val toks = ws.select(col("doc_id"),
+        explode(array_distinct(transform(
+          sequence(lit(1), size(col("ws")) - 2),
+          i => concat_ws(" ", element_at(col("ws"), i), element_at(col("ws"), i + 1),
+            element_at(col("ws"), i + 2))))).as("tok"))
+      val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
+      val wDoc = Window.partitionBy("doc_id").orderBy(col("df"), col("tok"))
+      toks.join(dfreq, "tok")
+        .select(col("doc_id"), col("tok"),
+          row_number().over(wDoc).as("rn"),
+          count(lit(1)).over(Window.partitionBy("doc_id")).as("sz"))
+        .localCheckpoint(false)
+    }
 
   /** EXACT containment-threshold join — the ASYMMETRIC twin of
     * [[prefixFilterJoinPairs]]: emit directed pairs where ≥ t of doc A's

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Fixtures.table
+import graft.Fixtures.{shared, table}
 
 /** Operators over the `events` stream table: JSON props profiling and
   * tumbling-window rollups. `ts` arrives as TIMESTAMP_NTZ (parquet
@@ -1832,28 +1832,18 @@ object EventOps {
     * the user partitioning IS the 100 TB partitioning. Ties at equal
     * timestamps break on event_id (total order both engines). Share is
     * exact-integer-double division. */
-  def transitionMatrix(spark: SparkSession, dir: String): DataFrame =
-    transitionMatrixImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits ([[maxConcurrencyPlan]] pattern:
-    * the lazy checkpoint collapses the dumped lineage to an RDD scan). */
-  private[graft] def transitionMatrixPlan(spark: SparkSession, dir: String): DataFrame =
-    transitionMatrixImpl(spark, dir, materialize = false)
-
-  private def transitionMatrixImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def transitionMatrix(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val steps = table(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type").as("cur"))
       .withColumn("nxt", lead(col("cur"), 1).over(w))
       .filter(col("nxt").isNotNull)
-    val counts0 = steps.groupBy("cur", "nxt").agg(count(lit(1)).as("n"))
     // event-type-domain-bounded (k² rows), read by the totals branch AND
     // the final join — without materialization the per-user lead window
     // over the corpus ran once per branch (r17; plan: 3 event scans +
     // 3 corpus windows → 1)
-    val counts = if (materialize) counts0.localCheckpoint(false) else counts0
+    val counts = shared(steps.groupBy("cur", "nxt").agg(count(lit(1)).as("n")))
     val totals = counts.groupBy(col("cur").as("tc")).agg(sum(col("n")).as("tot"))
     counts.join(broadcast(totals), col("cur") === col("tc"))
       .select(col("cur"), col("nxt"), col("n"),
@@ -2087,16 +2077,7 @@ object EventOps {
     * happens. Hours with no change points carry no row (documented:
     * concurrency is constant through such hours, equal to the last
     * reported running value). */
-  def maxConcurrency(spark: SparkSession, dir: String): DataFrame =
-    maxConcurrencyOf(spark, dir, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full sessionize →
-    * sweep lineage the one-time delta materialization runs. */
-  private[graft] def maxConcurrencyPlan(spark: SparkSession, dir: String): DataFrame =
-    maxConcurrencyOf(spark, dir, materialize = false)
-
-  private def maxConcurrencyOf(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def maxConcurrency(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("tus")
     val gapUs = 30L * 60 * 1000000
@@ -2119,12 +2100,11 @@ object EventOps {
     // 2 parquet scans). The change-point frame is then materialized once
     // (lazy localCheckpoint, distinct-timestamp-bounded rows) because the
     // bucket-offset branch and the sweep branch both read it.
-    val deltas0 = sessions.select(explode(array(
+    val deltas = shared(sessions.select(explode(array(
         struct(col("s_tus").as("tus"), lit(1L).as("d")),
         struct((col("e_tus") + 1).as("tus"), lit(-1L).as("d")))).as("ev"))
       .groupBy(col("ev.tus").as("tus")).agg(sum(col("ev.d")).as("d"))
-      .withColumn("bucket", expr(s"tus div $hourUs"))
-    val deltas = if (materialize) deltas0.localCheckpoint(false) else deltas0
+      .withColumn("bucket", expr(s"tus div $hourUs")))
     val wLocal = Window.partitionBy("bucket").orderBy("tus")
       .rowsBetween(Window.unboundedPreceding, 0)
     val wBucket = Window.orderBy("bucket")
@@ -2226,27 +2206,18 @@ object EventOps {
     * s_end >= w_start` theta form. Pair dedup (a session sharing k hours
     * with a window appears k times) happens on (window, user, session)
     * keys before counting. */
-  def busyWindowSessions(spark: SparkSession, dir: String): DataFrame =
-    busyWindowSessionsImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def busyWindowSessionsPlan(spark: SparkSession, dir: String): DataFrame =
-    busyWindowSessionsImpl(spark, dir, materialize = false)
-
-  private def busyWindowSessionsImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def busyWindowSessions(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hourUs = 3600L * 1000000
     val gapUs = 30L * 60 * 1000000
     val e = table(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("tus"))
-    val hourly0 = e.groupBy(expr(s"tus div $hourUs").as("h"))
-      .agg(count(lit(1)).as("n"))
     // calendar-bounded rows, read by the totals AND busy branches —
     // without materialization each branch re-ran the corpus scan +
     // hourly aggregation (r17; plan: 3 event scans → 2: the session
     // branch's own pass remains)
-    val hourly = if (materialize) hourly0.localCheckpoint(false) else hourly0
+    val hourly = shared(e.groupBy(expr(s"tus div $hourUs").as("h"))
+      .agg(count(lit(1)).as("n")))
     val tot = hourly.agg(sum(col("n")).as("total"), count(lit(1)).as("n_hours"))
     val busy = hourly.crossJoin(broadcast(tot))
       .filter(col("n") * col("n_hours") > col("total"))
@@ -2540,24 +2511,15 @@ object EventOps {
     * `Σ_even-half y − Σ_odd-half y` — one conditional aggregate per level
     * over hour-block keys, levels unioned into one DAG. Missing hours
     * count 0, exactly as a gap-filled series would. */
-  def waveletEnergy(spark: SparkSession, dir: String, levels: Int = 4): DataFrame =
-    waveletEnergyImpl(spark, dir, levels, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def waveletEnergyPlan(spark: SparkSession, dir: String): DataFrame =
-    waveletEnergyImpl(spark, dir, 4, materialize = false)
-
-  private def waveletEnergyImpl(spark: SparkSession, dir: String, levels: Int,
-      materialize: Boolean): DataFrame = {
-    val hourly0 = table(spark, dir, "events")
-      .select(col("event_type"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000").as("h"))
-      .groupBy("event_type", "h")
-      .agg(count(lit(1)).as("y"))
+  def waveletEnergy(spark: SparkSession, dir: String, levels: Int = 4): DataFrame = {
     // (type × calendar-hour)-bounded, read by every wavelet level —
     // without materialization the corpus scan + hourly aggregation ran
     // once per level (r17; plan: 4 event scans → 1)
-    val hourly = if (materialize) hourly0.localCheckpoint(false) else hourly0
+    val hourly = shared(table(spark, dir, "events")
+      .select(col("event_type"),
+        expr("unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000").as("h"))
+      .groupBy("event_type", "h")
+      .agg(count(lit(1)).as("y")))
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val frames = (1 to levels).map { k =>
       val block = 1L << k
@@ -3047,24 +3009,15 @@ object EventOps {
     * oracle asserts the boolean (the estimate itself is not
     * SQL-expressible). */
   def rollingWauSketchGate(spark: SparkSession, dir: String,
-      tolPct: Int = 5): DataFrame =
-    rollingWauSketchGateImpl(spark, dir, tolPct, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def rollingWauSketchGatePlan(spark: SparkSession, dir: String): DataFrame =
-    rollingWauSketchGateImpl(spark, dir, 5, materialize = false)
-
-  private def rollingWauSketchGateImpl(spark: SparkSession, dir: String,
-      tolPct: Int, materialize: Boolean): DataFrame = {
-    val perDay0 = table(spark, dir, "events")
-      .select(to_date(col("ts").cast("timestamp")).as("day"), col("user_id"))
-      .groupBy("day")
-      .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
+      tolPct: Int = 5): DataFrame = {
     // day-domain-bounded rows (one KB-sized sketch per calendar day), read
     // by BOTH self-join sides — without materialization each side re-ran
     // the corpus scan + HLL aggregation (r17, the r16 batch-4 finding;
     // plan: 3 event scans → 1)
-    val perDay = if (materialize) perDay0.localCheckpoint(false) else perDay0
+    val perDay = shared(table(spark, dir, "events")
+      .select(to_date(col("ts").cast("timestamp")).as("day"), col("user_id"))
+      .groupBy("day")
+      .agg(expr("hll_sketch_agg(user_id, 12)").as("sk")))
     val est = perDay.select(col("day").as("report_day"))
       .join(perDay,
         col("day").between(date_sub(col("report_day"), 6), col("report_day")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Fixtures.table
+import graft.Fixtures.{shared, table}
 
 /** Round-2 relational coverage battery (SURVEY §2.2-§2.6): the join shapes,
   * grouping structures, subquery forms, lateral expansion, window-function
@@ -927,28 +927,18 @@ object RelationalExt {
     * pair join is bounded by basket size² (baskets are human-scale), and
     * every downstream join is brand-keyed (≤ |brands|² rows). */
   def marketBasket(spark: SparkSession, dir: String, minCount: Int = 10,
-      k: Int = 20): DataFrame =
-    marketBasketImpl(spark, dir, minCount, k, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full basket lineage
-    * the one-time materialization runs. */
-  private[graft] def marketBasketPlan(spark: SparkSession, dir: String): DataFrame =
-    marketBasketImpl(spark, dir, 10, 20, materialize = false)
-
-  private def marketBasketImpl(spark: SparkSession, dir: String, minCount: Int,
-      k: Int, materialize: Boolean): DataFrame = {
-    val basket0 = table(spark, dir, "lineitem")
-      .join(broadcast(table(spark, dir, "part").select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("okey"), col("p_brand").as("brand"))
-      .distinct()
+      k: Int = 20): DataFrame = {
     // four plan branches read the basket (total, per-brand counts, both
     // sides of the pair self-join) and Spark has no cross-branch CSE —
     // without materialization the lineitem scan + broadcast join +
     // distinct ran four times (r16; plan: 4 lineitem scans → 1). This is
     // also the 100 TB shape: materialize the distinct basket once, answer
     // every statistic from it.
-    val basket = if (materialize) basket0.localCheckpoint(false) else basket0
+    val basket = shared(table(spark, dir, "lineitem")
+      .join(broadcast(table(spark, dir, "part").select("p_partkey", "p_brand")),
+        col("l_partkey") === col("p_partkey"))
+      .select(col("l_orderkey").as("okey"), col("p_brand").as("brand"))
+      .distinct())
     // n_orders folds in-plan (no eager count() at DataFrame-construction
     // time — the semdedup lesson); lift products run in DECIMAL(38,0),
     // c_ab·n·10⁶ wraps int64 past ~10⁹ baskets

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Fixtures.table
+import graft.Fixtures.{shared, table}
 
 /** Similarity search over the `embeddings` table (`embedding: array<float>`).
   *
@@ -1691,7 +1691,7 @@ object Similarity {
   }
 
   def semDedup(spark: SparkSession, dir: String, nCentroids: Int = -1,
-      maxId: Long = 1000, tau: Double = 0.9, doCheckpoint: Boolean = true): DataFrame = {
+      maxId: Long = 1000, tau: Double = 0.9): DataFrame = {
     // -1 = derive k from the corpus size via the cell-count policy (the
     // fixture corpus is base ∪ perturbed copies, hence 2× the base count;
     // one cheap metadata-adjacent count job, amortized over the whole query)
@@ -1700,13 +1700,12 @@ object Similarity {
       else math.min(maxId - 100, // seed pool: fixture vectors with id ∈ [100, maxId)
         semDedupK(2L * table(spark, dir, "embeddings").filter(col("vec_id") < maxId).count())).toInt
     // assignment + norm computed ONCE, reused on both sides of the pair
-    // join. doCheckpoint=false is the plan-audit path: even a LAZY
+    // join. A plan-audit session keeps the full lineage: even a LAZY
     // localCheckpoint materializes the upstream AQE query stages (= Spark
-    // jobs) at DataFrame-CONSTRUCTION time, so plan-only consumers skip it
-    // and lean on exchange reuse instead — the assignment's window shuffle
-    // is an identical subtree on both join sides (VERDICT r8 #2)
-    val cellsRaw = semDedupCells(spark, dir, k, maxId)
-    val cells = if (doCheckpoint) cellsRaw.localCheckpoint(false) else cellsRaw
+    // jobs) at DataFrame-CONSTRUCTION time, so the audit skips it and leans
+    // on exchange reuse instead — the assignment's window shuffle is an
+    // identical subtree on both join sides (VERDICT r8 #2)
+    val cells = shared(semDedupCells(spark, dir, k, maxId))
     val a = cells.select(col("cell"), col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na"))
     val b = cells.select(col("cell"), col("vec_id").as("id_b"), col("embedding").as("vb"), col("nrm").as("nb"))
     val dropped = a.join(b, Seq("cell"))
@@ -1720,19 +1719,6 @@ object Similarity {
         when(col("is_dup").isNull, 1L).otherwise(0L).as("keep"))
       .orderBy("vec_id")
   }
-
-  /** Plan-audit twin ([[TextAnalysis.unigramSurprisalPlan]] pattern): the
-    * gated query's auto-k runs a corpus count() — an eager Spark action at
-    * DataFrame-CONSTRUCTION time, fine for the gated run (one cheap job
-    * amortized over the query) but wrong for plan-only consumers, which
-    * would execute a job just to build a plan (ADVICE r7). This twin pins
-    * k explicitly AND skips the cells checkpoint (a lazy localCheckpoint
-    * still materializes upstream AQE stages at construction); the plan
-    * SHAPE is identical — k only sizes the broadcast centroid table, and
-    * exchange reuse stands in for the checkpoint's compute-once guarantee.
-    * Zero Spark jobs at construction, asserted in PlanQualitySpec. */
-  def semDedupPlan(spark: SparkSession, dir: String, nCentroids: Int = 8): DataFrame =
-    semDedup(spark, dir, nCentroids = nCentroids, doCheckpoint = false)
 
   def semDedupOracle(nCentroids: Int = -1, maxId: Long = 1000,
       tau: Double = 0.9, targetCellSize: Long = 125L): String = {
@@ -2204,13 +2190,6 @@ object Similarity {
     // pair-product aggregation — and BOTH [[dimCorrMatrix]] and
     // [[topPrincipalComponent]] need them. One build per (session, dir);
     // the bench releases the stages after their last consumer.
-    val (margPlan, pairsPlan) = covarianceSumsPlan(spark, dir)
-    (StageMemo(spark, dir, "cov_marg")(margPlan),
-      StageMemo(spark, dir, "cov_pairs")(pairsPlan))
-  }
-
-  /** Un-memoized twin for plan audits (PlansDump). */
-  private[graft] def covarianceSumsPlan(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val e = table(spark, dir, "embeddings")
       .select(col("vec_id"),
@@ -2242,14 +2221,8 @@ object Similarity {
         .select("p.*")
         .groupBy("dim_i", "dim_j")
         .agg(count(lit(1)).as("n"), sum(dec(col("xy"))).as("sxy"))
-    (marg, pairs)
-  }
-
-  /** Declarative [[dimCorrMatrix]] twin for PlansDump (the memoized form's
-    * own plan is two checkpoint scans + the join). */
-  private[graft] def dimCorrMatrixPlan(spark: SparkSession, dir: String): DataFrame = {
-    val (marg, pairs) = covarianceSumsPlan(spark, dir)
-    dimCorrFrom(marg, pairs)
+    (StageMemo(spark, dir, "cov_marg")(marg),
+      StageMemo(spark, dir, "cov_pairs")(pairs))
   }
 
   /** The d > [[AccumDimThreshold]] pair-sum form (also forced via
@@ -2267,10 +2240,6 @@ object Similarity {
 
   def dimCorrMatrix(spark: SparkSession, dir: String): DataFrame = {
     val (marg, pairs) = covarianceSums(spark, dir)
-    dimCorrFrom(marg, pairs)
-  }
-
-  private def dimCorrFrom(marg: DataFrame, pairs: DataFrame): DataFrame = {
     val mi = marg.select(col("dim").as("dim_i"), col("s").cast("double").as("si"),
       col("q").cast("double").as("qi"))
     val mj = marg.select(col("dim").as("dim_j"), col("s").cast("double").as("sj"),

@@ -41,6 +41,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * version is an immutable path (new snapshot ⇒ new dir ⇒ new key). Point
   * each corpus VERSION at its own directory; never rewrite one in place.
   * ([[clear]] resets the memo when a test must re-read a mutated dir.)
+  *
+  * ==Plan-audit sessions==
+  * The memo is one of the three materializers behind the engine's single
+  * materialization seam, [[graft.Fixtures.shared]] (the others are the
+  * lazy shared-frame checkpoints and the pooled catalog-profile builds).
+  * In a plan-audit session ([[graft.Fixtures.auditSession]], conf
+  * `spark.graft.plan.fullLineage=true`) [[apply]] returns the stage's
+  * un-materialized `build`, built once per audit session and kept apart
+  * from the memo: no memo read or write, no read-log entry, no checkpoint.
+  * A query's dumped plan then shows the full pipeline its stages run, and
+  * an audit call can never leave an un-checkpointed frame in the memo for
+  * a later real run. `PlansDump`, `PlanFiles` and specs are the only
+  * callers that open such a session; the bench and the shared test
+  * session never do.
   */
 private[graft] object StageMemo {
 
@@ -65,6 +79,29 @@ private[graft] object StageMemo {
   }
 
   def apply(spark: SparkSession, dir: String, stage: String)(
+      build: => DataFrame): DataFrame =
+    if (graft.Fixtures.fullLineage(spark)) auditFrame(spark, dir, stage)(build)
+    else memoized(spark, dir, stage)(build)
+
+  /** Plan-audit sessions: ONE un-materialized `build` per (audit session,
+    * dir, stage), so a stage read twice in one query is the same Dataset,
+    * as a memo read is in a normal session. Spark rejects a plan in which
+    * two distinct Datasets carry the same named observation (the
+    * candidate-pair stage's cap telemetry, `Dedup.cappedBucketPairs`), and
+    * a rebuild per read would also re-run every eager job inside the
+    * build. Kept apart from the memo: never checkpointed, never served to a
+    * normal session, no read-log entry. */
+  private val auditFrames = scala.collection.concurrent.TrieMap
+    .empty[SparkSession, scala.collection.concurrent.TrieMap[(String, String), DataFrame]]
+
+  private def auditFrame(spark: SparkSession, dir: String, stage: String)(
+      build: => DataFrame): DataFrame = {
+    auditFrames.keys.filter(_.sparkContext.isStopped).foreach(auditFrames.remove)
+    auditFrames.getOrElseUpdate(spark, scala.collection.concurrent.TrieMap.empty)
+      .getOrElseUpdate((dir, stage), build)
+  }
+
+  private def memoized(spark: SparkSession, dir: String, stage: String)(
       build: => DataFrame): DataFrame = {
     val ck = ctxKey(spark)
     // only ONE SparkContext can be active per JVM: entries from any other
@@ -104,8 +141,12 @@ private[graft] object StageMemo {
     * DataFrames go unreferenced and a GC runs) — kept for the dir-mutation
     * specs, where a caller may still hold a frame built on the old files.
     * Bench paths want [[releaseAll]] instead. */
-  def clear(): Unit =
-    stageCache.clear()
+  def clear(): Unit = {
+    stageCache.clear(); auditFrames.clear()
+  }
+
+  /** Number of resident memoized stages (all contexts). */
+  private[graft] def residentCount: Int = stageCache.size
 
   // ------------------------------------------------ bounded residency
 
@@ -152,11 +193,13 @@ private[graft] object StageMemo {
   /** Drops EVERY memoized stage and eagerly unpersists its blocks — the
     * bench/CLI reset (safe there: queries re-derive every frame from the
     * memo on each invocation, so no stale reference can survive). */
-  def releaseAll(): Unit =
+  def releaseAll(): Unit = {
     stageCache.keys.foreach { k =>
       releasedStages.put(normalize(k._3), ())
       stageCache.remove(k).foreach(unpersist)
     }
+    auditFrames.clear()
+  }
 
   // ------------------------------------------------ rebuild visibility
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Fixtures.table
+import graft.Fixtures.{shared, table}
 
 /** Text-analysis operators for LLM-data pipelines (BASELINE.json north star):
   * token counting, quality scoring, language ID, and document fingerprinting
@@ -1505,28 +1505,15 @@ object TextAnalysis {
       |  (SELECT count(*) FROM corpus WHERE len(string_split(text, ' ')) >= 5) AS n_span_docs,
       |  (SELECT count(*) FROM (SELECT g FROM spans GROUP BY g HAVING count(*) >= 2) d) AS n_dup_grams""".stripMargin
 
-  private def dupSpansFrom(spans: DataFrame, dupGrams: DataFrame): DataFrame =
-    spans
-      .join(dupGrams.withColumn("dup", lit(1L)), Seq("g"), "left")
+  def dupSpans(spark: SparkSession, dir: String): DataFrame =
+    sharedSpanTable(spark, dir)
+      .join(sharedDupGrams(spark, dir).withColumn("dup", lit(1L)), Seq("g"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_spans"),
         sum(coalesce(col("dup"), lit(0L))).as("n_dup"))
       .withColumn("dup_frac", col("n_dup").cast("double") / col("n_spans"))
       .select("doc_id", "n_spans", "n_dup", "dup_frac")
       .orderBy("doc_id")
-
-  def dupSpans(spark: SparkSession, dir: String): DataFrame =
-    dupSpansFrom(sharedSpanTable(spark, dir), sharedDupGrams(spark, dir))
-
-  /** Un-memoized twin of [[dupSpans]] for plan audits: the gated form
-    * reads materialized (checkpoint-scan) stages, which would make the
-    * shuffle/aggregate assertions vacuous. */
-  private[graft] def dupSpansPlan(spark: SparkSession, dir: String): DataFrame = {
-    val spans = spanTable(spark, dir)
-    dupSpansFrom(spans,
-      spans.groupBy("g").agg(count(lit(1)).as("n_docs"))
-        .filter(col("n_docs") >= 2).select("g"))
-  }
 
   val dupSpansOracle: String =
     s"""WITH corpus AS (
@@ -1572,21 +1559,19 @@ object TextAnalysis {
     * round 15 wires the keep/cut verdict into [[trainingManifest]] as keep
     * gate #5, so the gated `text_paragraph_dedup` row and the manifest
     * family read ONE build instead of re-segmenting the corpus each
-    * (VERDICT r14 #4). Tiny: five ints per doc. */
+    * (VERDICT r14 #4). Tiny: five ints per doc.
+    *
+    * Single-segmentation form (VERDICT r14 #4: the r14 shape fed one
+    * `paras` projection into BOTH the hash-frequency aggregate and the
+    * join-back, so the transform/slice/md5 projection over every document
+    * ran in two jobs). Here the corpus segments ONCE: per-(phash, doc_id)
+    * instance counts first (the only aggregate that touches exploded
+    * rows), then the cross-doc screen as a count over the phash partition
+    * of that GROUPED frame — grouped rows are bounded by
+    * docs-containing-the-hash, so the window is per-key work, never a
+    * per-language/global sort. */
   private[operators] def sharedParagraphVerdicts(spark: SparkSession,
-      dir: String): DataFrame =
-    StageMemo(spark, dir, "para_dedup")(paragraphDedupPlan(spark, dir))
-
-  /** Un-memoized twin for plan audits, and the single-segmentation form
-    * (VERDICT r14 #4: the r14 shape fed one `paras` projection into BOTH
-    * the hash-frequency aggregate and the join-back, so the transform/
-    * slice/md5 projection over every document ran in two jobs). Here the
-    * corpus segments ONCE: per-(phash, doc_id) instance counts first (the
-    * only aggregate that touches exploded rows), then the cross-doc
-    * screen as a count over the phash partition of that GROUPED frame —
-    * grouped rows are bounded by docs-containing-the-hash, so the window
-    * is per-key work, never a per-language/global sort. */
-  private[graft] def paragraphDedupPlan(spark: SparkSession, dir: String): DataFrame = {
+      dir: String): DataFrame = StageMemo(spark, dir, "para_dedup") {
     import org.apache.spark.sql.expressions.Window
     val paras = table(spark, dir, "documents")
       .filter(size(words) >= ParaWords)
@@ -2426,11 +2411,6 @@ object TextAnalysis {
     // every LM fit reads, and its consumers must not re-tokenize per query
     sharedUnigramBuckets(spark, dir).orderBy("doc_id")
 
-  /** Un-checkpointed twin for plan audits ([[dupSpansPlan]] pattern):
-    * the gated form's checkpoint collapses the upstream to an RDD scan. */
-  private[graft] def unigramSurprisalPlan(spark: SparkSession, dir: String): DataFrame =
-    unigramSurprisalFrom(docTermTf(spark, dir))
-
   private[operators] def docTermTf(spark: SparkSession, dir: String): DataFrame =
     // spread (r16): the single-split fixture scan otherwise runs the
     // tokenize AND the per-row counting on one core.
@@ -2556,7 +2536,7 @@ object TextAnalysis {
     * unigram form. */
   def bigramSurprisal(spark: SparkSession, dir: String): DataFrame =
     StageMemo(spark, dir, "lm_bi_buckets")(
-      bigramSurprisalFrom(docPairTf(spark, dir).localCheckpoint(false)))
+      bigramSurprisalFrom(shared(docPairTf(spark, dir))))
 
   /** The unigram tercile frame MATERIALIZED once per (session, dir) —
     * shared by [[lmOrderAgreement]] and the classifier family
@@ -2566,10 +2546,6 @@ object TextAnalysis {
     val docTerm = StageMemo(spark, dir, "nb_docterm")(docTermTf(spark, dir))
     StageMemo(spark, dir, "nb_buckets")(unigramSurprisalFrom(docTerm))
   }
-
-  /** Un-checkpointed twin for plan audits ([[unigramSurprisalPlan]]). */
-  private[graft] def bigramSurprisalPlan(spark: SparkSession, dir: String): DataFrame =
-    bigramSurprisalFrom(docPairTf(spark, dir))
 
   private[operators] def docPairTf(spark: SparkSession, dir: String): DataFrame =
     // row-local pair tf (r17, guide §2.3/§2.4 — the [[docTermTf]] move at
@@ -2884,11 +2860,6 @@ object TextAnalysis {
       tercileBucketsOf(trigramDocScores(trigramScoredMemo(spark, dir))))
       .orderBy("doc_id")
 
-  /** Un-checkpointed twin for plan audits ([[bigramSurprisalPlan]]). */
-  private[graft] def trigramSurprisalPlan(spark: SparkSession, dir: String): DataFrame =
-    tercileBucketsOf(trigramDocScores(trigramScoredOcc(docTriTf(spark, dir))))
-      .orderBy("doc_id")
-
   private def docTriTf(spark: SparkSession, dir: String): DataFrame =
     // row-local trigram tf (r17, guide §2.3/§2.4 — the [[docTermTf]] move
     // at order 3): per-doc distinct (w1, w2, w3, tf) out of one row via
@@ -2912,15 +2883,6 @@ object TextAnalysis {
     val occ = StageMemo(spark, dir, "lm_tri_occ")(docTriTf(spark, dir))
     StageMemo(spark, dir, "lm_tri_scored")(trigramScoredOcc(occ))
   }
-
-  // ProbeR16 accessors (dev-only): expose the lm_tri sub-builds for the
-  // stage-charge decomposition probe without widening real visibility.
-  private[operators] def docTriTfProbe(spark: SparkSession, dir: String): DataFrame =
-    docTriTf(spark, dir)
-  private[operators] def lmTriOccStage(spark: SparkSession, dir: String): DataFrame =
-    StageMemo(spark, dir, "lm_tri_occ")(docTriTf(spark, dir))
-  private[operators] def lmTriScoredStage(spark: SparkSession, dir: String): DataFrame =
-    trigramScoredMemo(spark, dir)
 
   private[operators] def trigramScoredOcc(triOcc: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -3130,21 +3092,13 @@ object TextAnalysis {
     * for a totals broadcast (measured: 5.2 s → the 2-pass form below at
     * sf0.1; the unpartitioned window is safe HERE precisely because its
     * input is ≤ charset² rows, never corpus-sized). */
-  def targetAffinity(spark: SparkSession, dir: String): DataFrame =
-    targetAffinityImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit (full tf lineage). */
-  private[graft] def targetAffinityPlan(spark: SparkSession, dir: String): DataFrame =
-    targetAffinityImpl(spark, dir, materialize = false)
-
-  private def targetAffinityImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def targetAffinity(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // spread (r16): single-split scan ⇒ one-core explode otherwise; lazy
     // checkpoint because the fit branch (counts) AND the scoring branch
     // both read the tf table — Spark has no cross-branch CSE, so the
     // corpus explode+group otherwise runs twice (the batch-4 finding)
-    val docTf0 = graft.Fixtures.spread(table(spark, dir, "documents"))
+    val docTf = shared(graft.Fixtures.spread(table(spark, dir, "documents"))
       .filter(length(col("text")) >= 2)
       // codepoint split + row-local pair concat (r16) — the
       // [[charBigrams]] rewrite: kills the O(len²) substring scans and
@@ -3157,8 +3111,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"),
         explode(graft.functions.VectorExpressions.gram_tfs(col("cs"), 2)).as("g"))
       .select(col("doc_id"), col("source"),
-        concat(col("g.w1"), col("g.w2")).as("bigram"), col("g.tf").as("tf"))
-    val docTf = if (materialize) docTf0.localCheckpoint(false) else docTf0
+        concat(col("g.w1"), col("g.w2")).as("bigram"), col("g.tf").as("tf")))
     val counts = docTf
       .groupBy("bigram")
       .agg(
@@ -4498,18 +4451,6 @@ object TextAnalysis {
        |  md5(list_aggregate(list_transform(postings, x -> CAST(x AS VARCHAR)), 'string_agg', ',')) AS postings_md5
        |FROM idx ORDER BY term""".stripMargin
 
-  def invertedIndexOracle(cap: Int = 10): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-       |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]
-       |  ))) AS term
-       |  FROM documents WHERE len(string_split(text, ' ')) >= 3
-       |)
-       |SELECT term, count(*) AS df,
-       |  list_sort(list(DISTINCT doc_id))[1:$cap] AS postings
-       |FROM toks GROUP BY term ORDER BY term""".stripMargin
-
   // --------------------------------------------- source TV-distance matrix
   /** Lexical similarity matrix between sources: TOTAL-VARIATION distance
     * between each pair's word distributions, exact in parts-per-million —
@@ -4522,24 +4463,15 @@ object TextAnalysis {
     * vocabulary score exactly 10⁶; near-identical mixes score ~0 — the
     * crawl-dialect / syndication fingerprint next to the near-dup
     * source-overlap matrix. */
-  def sourceTvDistance(spark: SparkSession, dir: String): DataFrame =
-    sourceTvDistanceImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def sourceTvDistancePlan(spark: SparkSession, dir: String): DataFrame =
-    sourceTvDistanceImpl(spark, dir, materialize = false)
-
-  private def sourceTvDistanceImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
-    val counts0 = table(spark, dir, "documents")
-      .select(col("source"), explode(words).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("source", "word").agg(count(lit(1)).as("c"))
+  def sourceTvDistance(spark: SparkSession, dir: String): DataFrame = {
     // (source × vocab)-bounded (Zipf), read by the totals branch AND both
     // self-join sides — without materialization the corpus tokenize +
     // explode + aggregate ran once per branch (r17; plan: 3 document
     // scans → 1)
-    val counts = if (materialize) counts0.localCheckpoint(false) else counts0
+    val counts = shared(table(spark, dir, "documents")
+      .select(col("source"), explode(words).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy("source", "word").agg(count(lit(1)).as("c")))
     val totals = counts.groupBy(col("source")).agg(sum(col("c")).as("n"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val a = counts.select(col("source").as("source_a"), col("word"), col("c").as("ca"))

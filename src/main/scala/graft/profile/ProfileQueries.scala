@@ -809,21 +809,47 @@ object ProfileQueries {
     * idle while lineitem's critical path runs. Submitting each branch's
     * own (tiny: rows-per-column) localCheckpoint from a bounded pool lets
     * the next table's scan back-fill the current one's straggler tail —
-    * measured 3.59 → 2.25 s steady on the catalog build (ProbeR17
-    * `catalog`, sf0.1). Deterministic: branch order is fixed, every
-    * branch materializes exactly the rows its plan defines, and all
-    * consumers re-sort. Pool of 3: enough to fill the tail, not enough to
-    * thrash (guide: "2-3 jobs in flight is plenty"). */
-  private def pooledUnion(frames: Seq[DataFrame], poolSize: Int = 3): DataFrame = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = frames.map(f => scala.concurrent.Future(f.localCheckpoint(true)))
-      futs.map(f =>
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        .reduce(_ union _)
-    } finally pool.shutdown()
+    * measured 3.59 → 2.25 s steady on the catalog build (the `catalog`
+    * probe in OPTIMIZATION_r17.md, sf0.1). Deterministic: branch order is
+    * fixed, every branch materializes exactly the rows its plan defines,
+    * and all consumers re-sort. Pool of 3: enough to fill the tail, not
+    * enough to thrash (guide: "2-3 jobs in flight is plenty").
+    *
+    * Fail-fast: the branches run under ONE Spark job group, and the
+    * caller waits for them in completion order. The first failed branch
+    * cancels the group (running jobs and any its siblings would still
+    * submit), the call waits for the siblings to unwind, then rethrows
+    * that branch's own exception — no orphaned sibling jobs outlive it.
+    * In a plan-audit session ([[Fixtures.shared]]) this is a plain union:
+    * no jobs, full lineage. */
+  private[graft] def pooledUnion(frames: Seq[DataFrame], poolSize: Int = 3): DataFrame = {
+    val sc = frames.head.sparkSession.sparkContext
+    if (Fixtures.fullLineage(frames.head.sparkSession)) frames.reduce(_ union _)
+    else {
+      val group = s"graft-pooled-union-${java.util.UUID.randomUUID()}"
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+      val done = new java.util.concurrent.ExecutorCompletionService[(Int, DataFrame)](pool)
+      frames.zipWithIndex.foreach { case (f, i) =>
+        done.submit { () =>
+          sc.setJobGroup(group, "pooled union branch")
+          (i, if (failed.get) null else f.localCheckpoint(true))
+        }
+      }
+      val out = new Array[DataFrame](frames.size)
+      try frames.indices.foreach { _ =>
+        val (i, df) = done.take().get()
+        out(i) = df
+      } catch {
+        case e: java.util.concurrent.ExecutionException =>
+          failed.set(true)
+          sc.cancelJobGroupAndFutureJobs(group, "a sibling pooled union branch failed")
+          pool.shutdown()
+          pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+          throw e.getCause
+      } finally pool.shutdown()
+      out.reduce(_ union _)
+    }
   }
 
   private def perTableCatalogFrames(spark: SparkSession, dir: String): Seq[DataFrame] =
@@ -838,10 +864,6 @@ object ProfileQueries {
           col(s"ndv_$c").as("ndv"))): _*)).as("p"))
         .select("p.*")
     }
-
-  /** Un-memoized, un-pooled twin for plan audits (full lineage). */
-  private[graft] def catalogProfilePlan(spark: SparkSession, dir: String): DataFrame =
-    perTableCatalogFrames(spark, dir).reduce(_ union _)
 
   val catalogProfileOracle: String = {
     val selects = Fixtures.allTables.flatMap { t =>
@@ -1261,40 +1283,23 @@ object ProfileQueries {
     * (≈ domain/10⁴ rows) see a single-partition window. A naive
     * `Window.orderBy(cents)` collapses the whole distinct-value frame to
     * one task (measured 4-6 s at sf0.1; this form ~1 s). */
-  def giniOf(df: DataFrame, column: String): DataFrame =
-    giniOfImpl(df, column, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full grouped-frame
-    * lineage the one-time materialization runs. */
-  private[graft] def giniOfPlan(df: DataFrame, column: String): DataFrame =
-    giniOfImpl(df, column, materialize = false)
-
-  private[graft] def giniProfilePlan(spark: SparkSession, dir: String): DataFrame =
-    giniOfPlan(Fixtures.table(spark, dir, "lineitem"), "l_extendedprice")
-
-  private[graft] def weightedPercentilesPlan(spark: SparkSession, dir: String): DataFrame =
-    weightedPercentilesOfPlan(Fixtures.table(spark, dir, "lineitem"),
-      "l_extendedprice", "l_quantity")
-
-  private def giniOfImpl(df: DataFrame, column: String,
-      materialize: Boolean): DataFrame = {
+  def giniOf(df: DataFrame, column: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // keys, counts, and prefix sums stay BIGINT through the shuffle and
     // windows (8 B keys, codegen'd hash agg + long-sum windows — decimal
     // keys here cost 3-4x in BigDecimal hash/compare/add); DECIMAL enters
     // only at the final per-row terms, where c·cb can exceed 2^63 at
     // extreme row counts
-    val grp0 = df
-      .filter(col(column).isNotNull)
-      .groupBy(floor(col(column) * 100 + 0.5).cast("bigint").as("cents"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("bucket", expr("cents div 10000"))
     // the bucket-offset branch and the per-row contribution branch both
     // read the grouped frame, and Spark has no cross-branch CSE — without
     // materialization the scan + group-by ran twice (r16; plan: 2 scans
     // → 1). Value-domain-bounded rows (distinct cents), so the lazy
     // localCheckpoint is tiny at any corpus size.
-    val grp = if (materialize) grp0.localCheckpoint(false) else grp0
+    val grp = Fixtures.shared(df
+      .filter(col(column).isNotNull)
+      .groupBy(floor(col(column) * 100 + 0.5).cast("bigint").as("cents"))
+      .agg(count(lit(1)).as("c"))
+      .withColumn("bucket", expr("cents div 10000")))
     val wLocal = Window.partitionBy("bucket").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wBucket = Window.orderBy("bucket")
@@ -1637,28 +1642,17 @@ object ProfileQueries {
     * on synthetic weight distributions: unit weights reduce to the plain
     * lower percentile; a dominant weight owns every quantile). */
   def weightedPercentilesOf(df: DataFrame, valueCol: String,
-      weightCol: String): DataFrame =
-    weightedPercentilesImpl(df, valueCol, weightCol, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full grouped-frame
-    * lineage the one-time materialization runs. */
-  private[graft] def weightedPercentilesOfPlan(df: DataFrame, valueCol: String,
-      weightCol: String): DataFrame =
-    weightedPercentilesImpl(df, valueCol, weightCol, materialize = false)
-
-  private def weightedPercentilesImpl(df: DataFrame, valueCol: String,
-      weightCol: String, materialize: Boolean): DataFrame = {
+      weightCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val grp0 = df
-      .filter(col(valueCol).isNotNull && col(weightCol).isNotNull)
-      .groupBy(floor(col(valueCol) * 100 + 0.5).cast("bigint").as("cents"))
-      .agg(sum(floor(col(weightCol) * 100 + 0.5).cast("bigint")).as("w"))
-      .withColumn("bucket", expr("cents div 10000"))
     // three plan branches read the grouped frame (bucket offsets, the
     // cumulative join, and the total-weight aggregate) and Spark has no
     // cross-branch CSE — without materialization the scan + group-by ran
     // three times (r16; plan: 3 scans → 1). Distinct-cents rows only.
-    val grp = if (materialize) grp0.localCheckpoint(false) else grp0
+    val grp = Fixtures.shared(df
+      .filter(col(valueCol).isNotNull && col(weightCol).isNotNull)
+      .groupBy(floor(col(valueCol) * 100 + 0.5).cast("bigint").as("cents"))
+      .agg(sum(floor(col(weightCol) * 100 + 0.5).cast("bigint")).as("w"))
+      .withColumn("bucket", expr("cents div 10000")))
     val wLocal = Window.partitionBy("bucket").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, 0)
     val wBucket = Window.orderBy("bucket")
@@ -1861,10 +1855,6 @@ object ProfileQueries {
         col("min_len").cast("bigint").as("min_len"),
         col("max_len").cast("bigint").as("max_len"),
         col("min_val"), col("max_val"))
-
-  /** Un-memoized, un-pooled twin for plan audits (full lineage). */
-  private[graft] def catalogStringProfilePlan(spark: SparkSession, dir: String): DataFrame =
-    perColumnStringFrames(spark, dir).reduce(_.union(_))
 
   val catalogStringProfileOracle: String =
     CatalogStringCols.flatMap { case (t, cols) => cols.map { c =>
@@ -2296,20 +2286,6 @@ object ProfileQueries {
       .select(col("tbl"), col("col_name").as("column_name"),
         col("n_rows"), col("n_nulls"), col("ndv"))
     val str = sharedCatalogStringProfile(spark, dir)
-      .select(col("table_name").as("tbl"), col("column_name"),
-        col("n_rows"), col("n_nulls"), col("ndv"))
-    num.unionAll(str)
-      .withColumn("is_pk", col("n_nulls") === 0 && col("ndv") === col("n_rows"))
-      .orderBy("tbl", "column_name")
-  }
-
-  /** Un-memoized twin for plan audits (full derivation incl. both
-    * whole-catalog scans that the gated form reads from the memo). */
-  private[graft] def pkDiscoveryPlan(spark: SparkSession, dir: String): DataFrame = {
-    val num = catalogProfilePlan(spark, dir)
-      .select(col("tbl"), col("col_name").as("column_name"),
-        col("n_rows"), col("n_nulls"), col("ndv"))
-    val str = catalogStringProfilePlan(spark, dir)
       .select(col("table_name").as("tbl"), col("column_name"),
         col("n_rows"), col("n_nulls"), col("ndv"))
     num.unionAll(str)

@@ -53,18 +53,22 @@ class OuterProductAggSpec extends AnyFunSuite {
 
   test("dimCorrMatrix is bit-identical under the accumulator form") {
     val dir = SparkSuite.Sf0001
-    // the un-memoized plan twin: the gated form memoizes covariance sums
-    // (r16), which would hand the second run the FIRST run's frames and
-    // make this comparison vacuous. Both forms are FORCED explicitly —
-    // the fixture's d=64 sits above the accumulator threshold since r16,
-    // so the un-forced default would compare accum against itself.
+    // each form in its OWN plan-audit session: a session (audit or not)
+    // builds the covariance stages once per dir and picks the form while
+    // building, so a second call in the same session would get the first
+    // call's frames back and compare one plan with itself. Both forms are
+    // FORCED explicitly — the fixture's d=64 sits above the accumulator
+    // threshold since r16, so the un-forced default would compare accum
+    // against itself.
+    def corr(): Seq[org.apache.spark.sql.Row] = graft.operators.Similarity
+      .dimCorrMatrix(graft.Fixtures.auditSession(spark), dir).collect().toSeq
     System.setProperty("graft.covariance.explode", "true")
     val explodeForm =
-      try graft.operators.Similarity.dimCorrMatrixPlan(spark, dir).collect().toSeq
+      try corr()
       finally System.clearProperty("graft.covariance.explode")
     System.setProperty("graft.covariance.accumulate", "true")
     try {
-      val accum = graft.operators.Similarity.dimCorrMatrixPlan(spark, dir).collect().toSeq
+      val accum = corr()
       assert(accum == explodeForm, "accumulator form diverged from the explode form")
     } finally System.clearProperty("graft.covariance.accumulate")
   }

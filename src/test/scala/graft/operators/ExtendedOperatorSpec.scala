@@ -94,7 +94,7 @@ class ExtendedOperatorSpec extends AnyFunSuite {
     // managed), never Dataset.persist caches — so running the whole family
     // must leave the CacheManager exactly as empty as it started
     spark.sharedState.cacheManager.clearCache()
-    Dedup.clearSharedStages()
+    StageMemo.clear()
     Dedup.minhashJaccardEstimate(spark, dir).collect()
     Dedup.nearDupTriangles(spark, dir).collect()
     Dedup.minhashCandidatePairs(spark, dir).collect()
@@ -105,7 +105,7 @@ class ExtendedOperatorSpec extends AnyFunSuite {
 
   test("materialized candidate-pair stage equals the declarative pipeline plan") {
     val staged = Dedup.minhashCandidatePairs(spark, dir).collect().map(_.toSeq).toSeq
-    val declarative = Dedup.minhashCandidatePairsPlan(spark, dir).collect().map(_.toSeq).toSeq
+    val declarative = Dedup.minhashCandidatePairs(SparkSuite.audit, dir).collect().map(_.toSeq).toSeq
     assert(staged == declarative)
   }
 }

@@ -1,10 +1,16 @@
 #!/usr/bin/env python3
-"""Parallel form of oracle_check_timeout.py for large-SF passes: N worker
-subprocesses, each DuckDB capped to a few threads so workers share the box
-instead of thrashing it. Same per-query compare and TIMEOUT semantics.
+"""Large-SF ledger oracle pass: the same per-query compare as
+oracle_check.py, but each query runs in its own subprocess under a
+wall-clock timeout, so DuckDB replays that are super-linear at 10x (LSH
+banding unions, prefix joins) report TIMEOUT instead of stalling the whole
+pass. A TIMEOUT is a feasibility statement about the ORACLE at this SF, not
+a correctness verdict. N worker subprocesses run at once, each DuckDB capped
+to a few threads so workers share the box instead of thrashing it;
+workers=1 is the sequential form.
 
 Usage: oracle_check_parallel.py <sfDir> <outDir> [timeoutSec] [workers] [skipFile]
 skipFile: newline-separated query names already verified (skipped).
+Spark-written corpora (TenXCorpus) are part-file directories and are globbed.
 """
 import concurrent.futures as cf
 import json
