@@ -8,9 +8,14 @@ import graft.render.TableRenderer
   * (`/root/reference/src/listTables.tsx:503-529`).
   *
   * Usage: `ProfileMain --data=/root/testdata/sf0.001 [--exact]
-  * [--footer-stats] [--threads=32]` — `--footer-stats` answers
-  * numeric/date ranges and row counts from parquet footers (DSv2
-  * aggregate pushdown, zero rows scanned; see Profiler.profileEntryFooter)
+  * [--footer-stats] [--threads=32]` — `--footer-stats` answers row
+  * counts and integer/decimal/date/timestamp ranges from parquet footers
+  * (one footer pass per table, plus DSv2 aggregate pushdown in at most one
+  * pushdown session per run); a residual scan, where a table needs one,
+  * serves float/double ranges (footers leave NaN out), boolean counts,
+  * and columns whose footer statistics lack a min/max. Every mode
+  * profiles the tables concurrently on Profiler's pool (see
+  * Profiler.profileRootFooter).
   *
   * Flags follow the reference's `parseArgs` shapes (`--flag`, `--key=value`,
   * listTables.tsx:203-216). Top-level failures print to stderr and set a

@@ -46,6 +46,20 @@ object ColumnClassifier {
     case _ => ColumnClass.Other
   }
 
+  /** Classify every field of a schema: the one place both the scan modes
+    * and footer mode decide a column's profile, so a time-of-day or
+    * nanos column gets the same class whichever mode profiles it. */
+  def classifySchema(schema: StructType, nanosCols: Set[String]): Seq[(StructField, ColumnClass)] =
+    schema.fields.toSeq.map(f =>
+      f -> classify(f.dataType, nanosCols.contains(f.name), isTimeOfDay(f)))
+
+  /** Classes profiled as a MIN–MAX range. */
+  def hasRange(cls: ColumnClass): Boolean = cls match {
+    case ColumnClass.Numeric | ColumnClass.Temporal | ColumnClass.TemporalNanos |
+         ColumnClass.TemporalTime => true
+    case _ => false
+  }
+
   /** True when the field is a JDBC TIME column in timestamp clothing: the
     * JDBC source marks such fields with `logical_time_type` metadata
     * (verified against embedded Derby; the key is Spark's, set by the JDBC

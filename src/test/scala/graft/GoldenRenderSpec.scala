@@ -31,6 +31,13 @@ class GoldenRenderSpec extends AnyFunSuite {
     assert(rendered == golden("golden_sf0.001_estimated.txt"))
   }
 
+  test("full sf0.001 footer-mode profile matches the estimated golden output") {
+    val spark = SparkSuite.spark
+    val rendered = TableRenderer.render(
+      Profiler.profileRootFooter(spark, SparkSuite.Sf0001), TableRenderer.Estimated)
+    assert(rendered == golden("golden_sf0.001_estimated.txt"))
+  }
+
   test("JSON rendering is valid and carries the same profile facts") {
     val spark = SparkSuite.spark
     val profiles = Profiler.profileRoot(spark, SparkSuite.Sf0001, exact = true)

@@ -10,7 +10,7 @@ class FooterAggSpec extends AnyFunSuite {
 
   test("footer-only stats push the aggregate to parquet and match a full scan") {
     val path = s"${SparkSuite.Sf0001}/orders.parquet"
-    val df = FooterAgg.stats(spark, path, Seq("o_orderkey", "o_totalprice"))
+    val df = FooterAgg.stats(FooterAgg.pushdownSession(spark), path, Seq("o_orderkey", "o_totalprice"))
     // the aggregate must reach the scan: metadata-only, no row scan
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedAggregation: [MIN(o_orderkey), MAX(o_orderkey), " +
